@@ -17,9 +17,9 @@ into the document, convert):
 4. convert the enriched documents with the requested mode pipeline
    (salted ``mapInPandas``, same engine as :func:`.job.run_job`),
 5. bucketed write with per-bucket manifests (lineage + row/span/media
-   counts) — resumable exactly like :func:`.job.run_job`: completed
-   buckets are pruned from BOTH input scans (bucket is a pure function
-   of doc_id, so the media scan prunes without a join).
+   counts) through the same resume/commit path as :func:`.job.run_job`:
+   completed buckets are pruned from BOTH input scans (bucket is a pure
+   function of doc_id, so the media scan prunes without a join).
 
 Scale: no step collects data-sized results to the driver; the only
 driver materialization is the per-bucket manifest stats (≤ n_buckets
@@ -33,9 +33,7 @@ convert → download); this job is its corpus-scale batch twin.
 
 from __future__ import annotations
 
-import argparse
 import json
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,31 +41,13 @@ from pyspark.sql import functions as F
 from ..operators.extract import extract_main_content
 from ..operators.pdf import enrich_media_spans
 from .job import (
+    commit_buckets,
     completed_buckets,
     convert_documents,
-    distinct_buckets_validated,
     get_spark,
-    _manifest_path,
+    job_arg_parser,
+    pending_buckets,
 )
-
-
-def _with_bucket(df: DataFrame, n_buckets: int) -> tuple[DataFrame, bool]:
-    """Attach the doc_id-hash bucket column; returns (df, had_bucket).
-
-    A pre-existing column is kept (it prunes resumed input), but the
-    caller must validate it against this job's ``n_buckets`` via
-    :func:`.job.distinct_buckets_validated` — output buckets/manifests
-    are always recomputed, and a layout written with a different count
-    would silently skip or re-run the wrong docs on resume.
-    """
-    if "bucket" in df.columns:
-        return df, True
-    return (
-        df.withColumn(
-            "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
-        ),
-        False,
-    )
 
 
 def extract_and_enrich(
@@ -101,97 +81,34 @@ def run_extract_job(
     n_buckets: int = 32,
     resume: bool = True,
     permissive_pdf: bool = True,
-    convert_partitions: int | None = None,
-    salt_buckets: int = 0,
 ) -> dict:
     """spark-submit entry: read → extract → enrich → convert → bucketed
-    write with manifests.  Returns job metrics (buckets, docs, media).
-
-    ``convert_partitions``/``salt_buckets`` forward to
-    :func:`.job.convert_documents`: the conversion stage otherwise runs
-    on the enrich join's AQE-coalesced output partitioning, which
-    targets shuffle BYTES — for the Python-heavy conversion stage whose
-    cost per byte is high, an explicit doc_id-hash repartition (salted
-    under skew) can be the better layout; measure per corpus (the A/B on
-    the uniform sandbox corpus is neutral, see BASELINE.md)."""
-    docs, docs_had_bucket = _with_bucket(spark.read.parquet(docs_path), n_buckets)
-    media, media_had_bucket = _with_bucket(spark.read.parquet(media_path), n_buckets)
-
-    done = completed_buckets(output_path) if resume else set()
-    if done:
-        done_list = sorted(done)
-        docs = docs.filter(~F.col("bucket").isin(done_list))
-        media = media.filter(~F.col("bucket").isin(done_list))
-
-    buckets = distinct_buckets_validated(docs, n_buckets, validate=docs_had_bucket)
-    if media_had_bucket:
-        distinct_buckets_validated(media, n_buckets, validate=True, what="media")
+    write with manifests.  Returns job metrics (buckets, docs, media)."""
+    lineage = {
+        "mode": mode,
+        "n_buckets": n_buckets,
+        "docs_path": docs_path,
+        "media_path": media_path,
+    }
+    done = completed_buckets(output_path, lineage) if resume else set()
+    docs, buckets = pending_buckets(spark.read.parquet(docs_path), n_buckets, done)
+    media, _ = pending_buckets(spark.read.parquet(media_path), n_buckets, done, what="media")
     metrics = {"mode": mode, "buckets_done": len(done), "buckets_run": len(buckets)}
-    if not buckets:
-        return metrics
-
-    enriched = extract_and_enrich(docs, media, permissive_pdf=permissive_pdf)
-    out = convert_documents(
-        enriched, mode, n_partitions=convert_partitions, salt_buckets=salt_buckets
-    ).withColumn(
-        "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
-    )
-    (
-        out.write.mode("append")
-        .partitionBy("bucket")
-        .parquet(os.path.join(output_path, "data"))
-    )
-
-    # manifests from the WRITTEN data (column-pruned re-scan, no DAG
-    # re-run) + media extraction counts from the small extracted frame
-    written = spark.read.parquet(os.path.join(output_path, "data")).filter(
-        F.col("bucket").isin(buckets)
-    )
-    stats = (
-        written.groupBy("bucket")
-        .agg(
-            F.count("*").alias("doc_count"),
-            F.sum("n_spans_in").alias("spans_in"),
-            F.sum("n_spans_out").alias("spans_out"),
-            F.sum(
-                F.size(F.filter("spans", lambda s: s["kind"] == "media_text"))
-            ).alias("media_texts"),
-            F.sum(F.size("findings")).alias("findings"),
+    if buckets:
+        enriched = extract_and_enrich(docs, media, permissive_pdf=permissive_pdf)
+        media_texts = F.sum(F.size(F.filter("spans", lambda s: s["kind"] == "media_text")))
+        metrics |= commit_buckets(
+            convert_documents(enriched, mode), output_path, n_buckets, buckets, lineage,
+            extra_aggs={"media_texts": media_texts},
         )
-        .collect()
-    )
-    os.makedirs(os.path.join(output_path, "_manifests"), exist_ok=True)
-    for r in stats:
-        with open(_manifest_path(output_path, r["bucket"]), "w") as f:
-            json.dump(
-                {
-                    "bucket": r["bucket"],
-                    "mode": mode,
-                    "doc_count": r["doc_count"],
-                    "spans_in": int(r["spans_in"]),
-                    "spans_out": int(r["spans_out"]),
-                    "media_texts": int(r["media_texts"]),
-                    "findings": int(r["findings"]),
-                    "docs_path": docs_path,
-                    "media_path": media_path,
-                },
-                f,
-            )
-    metrics["docs"] = sum(r["doc_count"] for r in stats)
-    metrics["media_texts"] = sum(int(r["media_texts"]) for r in stats)
     return metrics
 
 
 def main() -> None:
-    p = argparse.ArgumentParser(description="Extraction → conversion job")
+    p = job_arg_parser("Extraction → conversion job")
     p.add_argument("--docs", required=True)
     p.add_argument("--media", required=True)
-    p.add_argument("--output", required=True)
-    p.add_argument("--mode", default="officeAction")
-    p.add_argument("--buckets", type=int, default=32)
-    p.add_argument("--no-resume", action="store_true")
     p.add_argument("--strict-pdf", action="store_true")
-    p.add_argument("--master", default=None)
     a = p.parse_args()
     spark = get_spark("patent-decision-extract-job", master=a.master)
     m = run_extract_job(

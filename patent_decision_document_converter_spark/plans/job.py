@@ -17,15 +17,21 @@ Span semantics (FIXTURES.md §1 / BASELINE north_rule):
 - output offsets are re-densified 0..n-1 in document order (the per-row
   invariant is (kind, text, media_ref, order)).
 
-Resumability (north_rule): per-bucket manifest JSONs carry doc/span counts +
-an input fingerprint; a restart skips buckets whose manifest matches.
+Resumability (north_rule): each bucket is written by dynamic partition
+overwrite, then its manifest JSON (doc/span/finding counts plus the run's
+lineage: mode, n_buckets and input path(s)) is renamed into place.  A
+restart skips buckets that have a manifest and refuses to resume when any
+manifest's lineage differs from the call's; file contents are not
+fingerprinted.  A bucket without a manifest is re-run and its data
+replaced, so re-running a bucket never duplicates rows.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,7 +39,7 @@ from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from ..functions import typo
 from ..operators.dedup import stage_barrier
-from ..sources.documents import SPANS_OUT_SCHEMA
+from ..sources.documents import FINDING_TYPE, SPANS_OUT_SCHEMA, doc_bucket
 from .registry import MODES, mode_fn
 
 # Arrow batch sizing: document rows are large (KB-MB); keep batches small
@@ -72,14 +78,28 @@ def get_spark(
     return b.getOrCreate()
 
 
-def _convert_rows(mode: str):
-    """Build the mapInPandas function for a mode.
+def _run_kernel(mode: str) -> Callable[[str], tuple[str, list[dict]]]:
+    """One text run -> (converted text, typo findings) for a mode.
 
     Runs on executors: the fused pipeline callable and the trie/regex
     constants are module-level (built once per Python worker, not per batch).
     """
     fn = mode_fn(mode)
-    emit_findings = mode not in ("paragraph", "html")
+    if mode in ("paragraph", "html"):
+        return lambda text: (fn(text), [])
+    fields = FINDING_TYPE.fieldNames()
+
+    def convert(text: str) -> tuple[str, list[dict]]:
+        res = typo.check(text)
+        found = [{k: it[k] for k in fields} for it in res["items"]] if res["hasError"] else []
+        return fn(text), found
+
+    return convert
+
+
+def _convert_rows(mode: str):
+    """Build the mapInPandas function for a mode: one row = one document."""
+    convert = _run_kernel(mode)
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
         import pandas as pd
@@ -98,21 +118,8 @@ def _convert_rows(mode: str):
                 def flush_run():
                     if not run_texts:
                         return
-                    text = "\n".join(run_texts)
-                    converted = fn(text)
-                    if emit_findings:
-                        res = typo.check(text)
-                        if res["hasError"]:
-                            findings.extend(
-                                {
-                                    "id": it["id"],
-                                    "message": it["message"],
-                                    "match": it["match"],
-                                    "index": it["index"],
-                                    "context": it["context"],
-                                }
-                                for it in res["items"]
-                            )
+                    converted, found = convert("\n".join(run_texts))
+                    findings.extend(found)
                     out_spans.append(
                         {"kind": "text", "text": converted, "media_ref": "", "offset": -1}
                     )
@@ -195,37 +202,19 @@ def convert_documents(
 
 def _convert_runs(mode: str):
     """mapInPandas fn for the exploded strategy: one row = one text RUN."""
-    fn = mode_fn(mode)
-    emit_findings = mode not in ("paragraph", "html")
+    convert = _run_kernel(mode)
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
         import pandas as pd
 
         for pdf in batches:
-            texts, findings_col = [], []
-            for text in pdf["run_text"]:
-                texts.append(fn(text))
-                items = []
-                if emit_findings:
-                    res = typo.check(text)
-                    if res["hasError"]:
-                        items = [
-                            {
-                                "id": it["id"],
-                                "message": it["message"],
-                                "match": it["match"],
-                                "index": it["index"],
-                                "context": it["context"],
-                            }
-                            for it in res["items"]
-                        ]
-                findings_col.append(items)
+            results = [convert(text) for text in pdf["run_text"]]
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
                     "ord_key": pdf["ord_key"],
-                    "text": texts,
-                    "findings": findings_col,
+                    "text": [text for text, _ in results],
+                    "findings": [found for _, found in results],
                 }
             )
 
@@ -540,14 +529,31 @@ def _manifest_path(output_path: str, bucket: int) -> str:
     return os.path.join(output_path, "_manifests", f"bucket={bucket}.json")
 
 
-def completed_buckets(output_path: str) -> set[int]:
+def completed_buckets(output_path: str, lineage: dict | None = None) -> set[int]:
+    """Bucket ids that have a manifest under ``output_path``.
+
+    With ``lineage`` (the manifest fields naming a run: mode, n_buckets
+    and input path(s)), raise ValueError when any manifest holds other
+    values: resuming would mix the outputs of two different runs.
+    """
     mdir = os.path.join(output_path, "_manifests")
     if not os.path.isdir(mdir):
         return set()
     done = set()
     for f in os.listdir(mdir):
-        if f.startswith("bucket=") and f.endswith(".json"):
-            done.add(int(f[len("bucket="):-len(".json")]))
+        if not (f.startswith("bucket=") and f.endswith(".json")):
+            continue
+        if lineage:
+            with open(os.path.join(mdir, f)) as fh:
+                manifest = json.load(fh)
+            theirs = {k: manifest.get(k) for k in lineage}
+            if theirs != lineage:
+                raise ValueError(
+                    f"{output_path} holds manifest {f} of another run ({theirs}, "
+                    f"this run is {lineage}); refusing to resume. Use a new "
+                    "output path."
+                )
+        done.add(int(f[len("bucket="):-len(".json")]))
     return done
 
 
@@ -555,10 +561,11 @@ def distinct_buckets_validated(
     df: DataFrame, n_buckets: int, validate: bool, what: str = "input"
 ) -> list[int]:
     """Collect the distinct bucket ids; with ``validate``, fail fast when a
-    pre-existing ``bucket`` column disagrees with this job's ``n_buckets``.
+    pre-existing ``bucket`` column disagrees with this job's ``n_buckets``
+    or holds NULL.
 
-    The jobs always RECOMPUTE output buckets / manifests as
-    ``pmod(xxhash64(doc_id), n_buckets)`` but prune resumed input on the
+    The jobs always RECOMPUTE output buckets / manifests with
+    :func:`~..sources.documents.doc_bucket` but prune resumed input on the
     layout's pre-existing bucket column — a layout written with a
     different ``n_buckets`` would silently skip or re-run the wrong docs
     on resume.  The check rides the same column-pruned scan that already
@@ -568,22 +575,90 @@ def distinct_buckets_validated(
     """
     if not validate:
         return [r["bucket"] for r in df.select("bucket").distinct().collect()]
-    expect = F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
-    rows = (
-        df.groupBy("bucket")
-        .agg(F.max((F.col("bucket") != expect).cast("int")).alias("_bad"))
-        .collect()
-    )
-    bad = sorted(r["bucket"] for r in rows if r["_bad"])
+    bad_row = ~F.col("bucket").eqNullSafe(doc_bucket(n_buckets))
+    rows = df.groupBy("bucket").agg(F.max(bad_row.cast("int")).alias("_bad")).collect()
+    bad = sorted((r["bucket"] for r in rows if r["_bad"]), key=str)
     if bad:
         raise ValueError(
             f"{what} layout's pre-existing bucket column disagrees with "
             f"n_buckets={n_buckets} for bucket ids {bad[:8]}"
             f"{'...' if len(bad) > 8 else ''}: the layout was written with "
-            "a different bucket count. Re-run with the layout's n_buckets, "
-            "or drop the bucket column to recompute."
+            "a different bucket count or holds NULL buckets. Re-run with the "
+            "layout's n_buckets, or drop the bucket column to recompute."
         )
     return [r["bucket"] for r in rows]
+
+
+def pending_buckets(
+    df: DataFrame, n_buckets: int, done: set[int], what: str = "input"
+) -> tuple[DataFrame, list[int]]:
+    """Attach the bucket column (or validate a pre-existing one) and prune
+    the ``done`` buckets; returns (pruned df, its distinct bucket ids).
+
+    On a bucket-partitioned layout the prune is partition pruning: no
+    data of a completed bucket is read.  NULL buckets survive the prune so
+    that validation rejects them.
+    """
+    has_bucket = "bucket" in df.columns
+    if not has_bucket:
+        df = df.withColumn("bucket", doc_bucket(n_buckets))
+    if done:
+        df = df.filter(F.col("bucket").isNull() | ~F.col("bucket").isin(sorted(done)))
+    return df, distinct_buckets_validated(df, n_buckets, validate=has_bucket, what=what)
+
+
+def commit_buckets(
+    out: DataFrame,
+    output_path: str,
+    n_buckets: int,
+    buckets: list[int],
+    lineage: dict,
+    extra_aggs: dict[str, Column] | None = None,
+) -> dict:
+    """Write ``out`` (spans_out rows) bucketed by doc_id hash, then one
+    manifest per bucket; returns ``docs`` plus one total per ``extra_aggs``.
+
+    Dynamic partition overwrite replaces exactly the buckets written, so
+    a re-run bucket (manifest lost, run killed mid-write) ends with one
+    copy of each doc.  Counts come from the WRITTEN data (a column-pruned
+    scan of 4 small columns plus whatever ``extra_aggs`` read) rather than
+    a second run of the conversion DAG.  Each manifest carries
+    ``lineage`` and is renamed into place, so none is ever half-written.
+    """
+    data = os.path.join(output_path, "data")
+    # bucket is a pure function of doc_id: recompute it instead of joining
+    # it back from the input (no shuffle; stays aligned with the input layout)
+    (
+        out.withColumn("bucket", doc_bucket(n_buckets))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket")
+        .parquet(data)
+    )
+    extra = extra_aggs or {}
+    stats = (
+        out.sparkSession.read.parquet(data)
+        .filter(F.col("bucket").isin(buckets))
+        .groupBy("bucket")
+        .agg(
+            F.count("*").alias("doc_count"),
+            F.sum("n_spans_in").alias("spans_in"),
+            F.sum("n_spans_out").alias("spans_out"),
+            F.sum(F.size("findings")).alias("findings"),
+            *(agg.alias(k) for k, agg in extra.items()),
+        )
+        .collect()
+    )
+    os.makedirs(os.path.join(output_path, "_manifests"), exist_ok=True)
+    for r in stats:
+        path = _manifest_path(output_path, r["bucket"])
+        with open(path + ".tmp", "w") as f:
+            json.dump({k: int(v) for k, v in r.asDict().items()} | lineage, f)
+        os.replace(path + ".tmp", path)
+    return {
+        "docs": sum(r["doc_count"] for r in stats),
+        **{k: sum(int(r[k]) for r in stats) for k in extra},
+    }
 
 
 def run_job(
@@ -596,85 +671,33 @@ def run_job(
 ) -> dict:
     """spark-submit entry: read -> convert -> bucketed write with manifests.
 
-    Resumable: buckets listed in _manifests/ are pruned from the INPUT scan
-    (partition pruning on the bucket column — no data read for completed
-    buckets) and their outputs are left untouched.
+    Resumable (see the module docstring): buckets with a manifest are
+    pruned from the INPUT scan and their outputs are left untouched.
     """
-    df = spark.read.parquet(input_path)
-    has_bucket = "bucket" in df.columns
-    if not has_bucket:
-        df = df.withColumn(
-            "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
-        )
-
-    done = completed_buckets(output_path) if resume else set()
-    if done:
-        df = df.filter(~F.col("bucket").isin(sorted(done)))
-
-    buckets = distinct_buckets_validated(df, n_buckets, validate=has_bucket)
+    lineage = {"mode": mode, "n_buckets": n_buckets, "input_path": input_path}
+    done = completed_buckets(output_path, lineage) if resume else set()
+    df, buckets = pending_buckets(spark.read.parquet(input_path), n_buckets, done)
     metrics = {"mode": mode, "buckets_done": len(done), "buckets_run": len(buckets)}
-
-    if not buckets:
-        return metrics
-
-    out = convert_documents(df.select("doc_id", "spans"), mode)
-    # bucket is a pure function of doc_id — recompute instead of joining
-    # (saves a shuffle; the write partitioning stays aligned with the input)
-    out = out.withColumn(
-        "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
-    )
-
-    (
-        out.write.mode("append")
-        .partitionBy("bucket")
-        .parquet(os.path.join(output_path, "data"))
-    )
-
-    # per-bucket manifests (lineage + row/span counts) — computed from the
-    # WRITTEN data (column-pruned scan of 4 small columns) rather than
-    # re-running the conversion DAG a second time
-    written = spark.read.parquet(os.path.join(output_path, "data")).filter(
-        F.col("bucket").isin(buckets)
-    )
-    stats = (
-        written.groupBy("bucket")
-        .agg(
-            F.count("*").alias("doc_count"),
-            F.sum("n_spans_in").alias("spans_in"),
-            F.sum("n_spans_out").alias("spans_out"),
-            F.sum(F.size("findings")).alias("findings"),
-        )
-        .collect()
-    )
-    os.makedirs(os.path.join(output_path, "_manifests"), exist_ok=True)
-    for r in stats:
-        with open(_manifest_path(output_path, r["bucket"]), "w") as f:
-            json.dump(
-                {
-                    "bucket": r["bucket"],
-                    "mode": mode,
-                    "doc_count": r["doc_count"],
-                    "spans_in": int(r["spans_in"]),
-                    "spans_out": int(r["spans_out"]),
-                    "findings": int(r["findings"]),
-                    "input_path": input_path,
-                },
-                f,
-            )
-    metrics["docs"] = sum(r["doc_count"] for r in stats)
+    if buckets:
+        out = convert_documents(df.select("doc_id", "spans"), mode)
+        metrics |= commit_buckets(out, output_path, n_buckets, buckets, lineage)
     return metrics
 
 
-def main() -> None:
-    import argparse
-
-    p = argparse.ArgumentParser(description="Patent-decision document conversion job")
-    p.add_argument("--input", required=True)
+def job_arg_parser(description: str) -> argparse.ArgumentParser:
+    """The options both job CLIs share; each job adds its input flags."""
+    p = argparse.ArgumentParser(description=description)
     p.add_argument("--output", required=True)
     p.add_argument("--mode", default="officeAction", choices=sorted(MODES))
     p.add_argument("--buckets", type=int, default=32)
     p.add_argument("--no-resume", action="store_true")
     p.add_argument("--master", default=None)
+    return p
+
+
+def main() -> None:
+    p = job_arg_parser("Patent-decision document conversion job")
+    p.add_argument("--input", required=True)
     args = p.parse_args()
 
     spark = get_spark(master=args.master)

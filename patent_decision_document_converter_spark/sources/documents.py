@@ -16,7 +16,8 @@ make restarts resumable at bucket granularity.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -56,6 +57,11 @@ SPANS_OUT_SCHEMA = StructType([
 ])
 
 
+def doc_bucket(n_buckets: int) -> Column:
+    """The bucket transform every writer and job partitions by."""
+    return F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
+
+
 def create_documents_df(spark: SparkSession, rows: list[dict]) -> DataFrame:
     """Build the documents DataFrame from generator rows
     (sources.generator.make_documents_rows)."""
@@ -72,7 +78,7 @@ def create_documents_df(spark: SparkSession, rows: list[dict]) -> DataFrame:
 def write_documents(df: DataFrame, path: str, n_buckets: int = 32) -> None:
     """Write the documents table bucket-partitioned by doc_id hash."""
     (
-        df.withColumn("bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int"))
+        df.withColumn("bucket", doc_bucket(n_buckets))
         .write.mode("overwrite")
         .partitionBy("bucket")
         .parquet(path)
@@ -95,9 +101,7 @@ def write_documents_table(
     documents as the table-format story, now exercised (not just
     modeled) in tests/test_sources.py."""
     w = (
-        df.withColumn(
-            "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
-        )
+        df.withColumn("bucket", doc_bucket(n_buckets))
         .writeTo(table)
         .using("parquet")
         .partitionedBy(F.col("bucket"))
@@ -106,10 +110,12 @@ def write_documents_table(
         w = w.tableProperty("location", location)
     try:
         w.createOrReplace()
-    except Exception:
+    except AnalysisException as e:
         # the built-in session catalog supports CREATE but not REPLACE
         # TABLE AS SELECT; atomic replace needs a true v2 catalog
         # (Iceberg/Delta).  Emulate with drop+create there.
+        if e.getCondition() != "UNSUPPORTED_FEATURE.TABLE_OPERATION":
+            raise
         df.sparkSession.sql(f"DROP TABLE IF EXISTS {table}")
         w.create()
 
@@ -121,9 +127,7 @@ def overwrite_document_partitions(df: DataFrame, table: str, n_buckets: int = 32
     byte-untouched — the idempotent re-run/backfill primitive for the
     resumable jobs when the corpus lives in a catalog table instead of
     a raw parquet layout."""
-    out = df.withColumn(
-        "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
-    )
+    out = df.withColumn("bucket", doc_bucket(n_buckets))
     try:
         out.writeTo(table).overwritePartitions()
     except Exception:
@@ -136,7 +140,8 @@ def overwrite_document_partitions(df: DataFrame, table: str, n_buckets: int = 32
         prev = spark.conf.get(key, None)
         spark.conf.set(key, "dynamic")
         try:
-            out.write.mode("overwrite").insertInto(table)
+            # insertInto is positional: match the table's column order
+            out.select(spark.table(table).columns).write.mode("overwrite").insertInto(table)
         finally:
             if prev is None:
                 spark.conf.unset(key)
@@ -157,7 +162,7 @@ def write_media(df: DataFrame, path: str, n_buckets: int = 32) -> None:
     doc_id-hash function as :func:`write_documents`, so the media table
     stays aligned with its documents table."""
     (
-        df.withColumn("bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int"))
+        df.withColumn("bucket", doc_bucket(n_buckets))
         .write.mode("overwrite")
         .partitionBy("bucket", "format")
         .parquet(path)

@@ -174,6 +174,42 @@ def test_run_extract_job_end_to_end_and_resume(spark, paths, tmp_path):
         assert [tuple(s) for s in again[k]["spans"]] == [tuple(s) for s in written[k]["spans"]]
 
 
+def test_extract_job_rerun_bucket_is_exactly_once(spark, paths, tmp_path):
+    """A bucket whose manifest is lost while its data stays re-runs by
+    replacing its partition: one row per doc_id, and the new manifest
+    counts one copy of each doc."""
+    docs_path, media_path = paths
+    out_path = str(tmp_path / "out")
+    run_extract_job(spark, docs_path, media_path, out_path, n_buckets=4)
+    victim = sorted(glob.glob(os.path.join(out_path, "_manifests", "*.json")))[0]
+    with open(victim) as f:
+        first = json.load(f)
+    os.remove(victim)
+
+    m = run_extract_job(spark, docs_path, media_path, out_path, n_buckets=4)
+    assert m["buckets_run"] == 1
+    ids = [r["doc_id"] for r in spark.read.parquet(os.path.join(out_path, "data")).collect()]
+    assert sorted(ids) == sorted(r["doc_id"] for r in _docs_rows())
+    with open(victim) as f:
+        again = json.load(f)
+    assert again == first
+    bucket_docs = spark.read.parquet(docs_path).filter(F.col("bucket") == again["bucket"])
+    assert again["doc_count"] == bucket_docs.count()
+
+
+def test_extract_job_refuses_foreign_manifests(spark, paths, tmp_path):
+    """Resuming into an output whose manifests name another mode or media
+    table raises instead of skipping every bucket."""
+    docs_path, media_path = paths
+    out_path, other_media = str(tmp_path / "out"), str(tmp_path / "media2")
+    shutil.copytree(media_path, other_media)
+    run_extract_job(spark, docs_path, media_path, out_path, n_buckets=4)
+    with pytest.raises(ValueError, match="refusing to resume"):
+        run_extract_job(spark, docs_path, media_path, out_path, mode="pct", n_buckets=4)
+    with pytest.raises(ValueError, match="refusing to resume"):
+        run_extract_job(spark, docs_path, other_media, out_path, n_buckets=4)
+
+
 def test_extract_job_cli_end_to_end(paths, tmp_path):
     """The spark-submit-shaped CLI: python -m ...plans.extract_job —
     argparse wiring, the metrics JSON line, and the bucketed write."""

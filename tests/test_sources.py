@@ -193,5 +193,17 @@ def test_writeto_table_overwrite_partitions(spark, tmp_path_factory):
         # partition pruning still works on the table read
         pruned = spark.read.table(table).filter(F.col("bucket") == bucket_id)
         assert {r["doc_id"] for r in pruned.collect()} == set(ids)
+
+        # a frame whose columns are in another order than the table's
+        # lands by name, not by position
+        reordered = create_documents_df(
+            spark, [doc(i, f"再改訂{i}") for i in range(20) if f"d{i}" in set(ids)]
+        ).select("spans", "doc_id")
+        overwrite_document_partitions(reordered, table, n_buckets=4)
+        again_rows = spark.read.table(table).collect()
+        again = {r["doc_id"]: r["spans"][0]["text"] for r in again_rows}
+        assert len(again_rows) == 20
+        assert all(again[d] == f"再改訂{d[1:]}" for d in ids)
+        assert all(again[d] == before[d] for d in again if d not in set(ids))
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")

@@ -4,8 +4,11 @@ permutation invariance, quarantine, resumable checkpointing.
 Uses one shared local SparkSession (module scope) — JVM startup dominates.
 """
 
+import json
 import os
 import shutil
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -307,3 +310,74 @@ def test_convert_documents_parallelism_floor(spark, docs_rows):
     assert [r.asDict(recursive=True) for r in a] == [
         r.asDict(recursive=True) for r in b
     ]
+
+
+def test_run_job_rerun_bucket_is_exactly_once(spark, docs_rows, tmp_path):
+    """A bucket whose manifest is lost while its data stays re-runs by
+    replacing its partition, not appending to it: one row per doc_id, and
+    the new manifest counts one copy of each doc."""
+    inp, outp = str(tmp_path / "in"), str(tmp_path / "out")
+    write_documents(create_documents_df(spark, docs_rows), inp, n_buckets=4)
+    run_job(spark, inp, outp, "pct", n_buckets=4)
+    victim = min(completed_buckets(outp))
+    manifest = os.path.join(outp, "_manifests", f"bucket={victim}.json")
+    with open(manifest) as f:
+        first = json.load(f)
+    os.remove(manifest)
+
+    assert run_job(spark, inp, outp, "pct", n_buckets=4)["buckets_run"] == 1
+    ids = [r["doc_id"] for r in spark.read.parquet(os.path.join(outp, "data")).collect()]
+    assert sorted(ids) == sorted(r["doc_id"] for r in docs_rows)
+    with open(manifest) as f:
+        again = json.load(f)
+    assert again == first
+    assert again["doc_count"] == spark.read.parquet(inp).filter(F.col("bucket") == victim).count()
+
+
+def test_run_job_refuses_foreign_manifests(spark, docs_rows, tmp_path):
+    """Resuming into an output whose manifests name another mode, bucket
+    count or input path raises instead of skipping or mixing buckets."""
+    inp, other, outp = (str(tmp_path / n) for n in ("in", "other", "out"))
+    create_documents_df(spark, docs_rows).write.parquet(inp)  # no bucket column
+    shutil.copytree(inp, other)
+    run_job(spark, inp, outp, "pct", n_buckets=4)
+    for path, mode, n_buckets in [(inp, "officeAction", 4), (inp, "pct", 8), (other, "pct", 4)]:
+        with pytest.raises(ValueError, match="refusing to resume"):
+            run_job(spark, path, outp, mode, n_buckets=n_buckets)
+    assert run_job(spark, inp, outp, "pct", n_buckets=4)["buckets_run"] == 0
+
+
+def test_null_bucket_fails_validation(spark, docs_rows, tmp_path):
+    """A layout holding a NULL bucket (a bucket=__HIVE_DEFAULT_PARTITION__
+    directory) fails the bucket validation instead of passing it."""
+    inp = str(tmp_path / "in")
+    write_documents(create_documents_df(spark, docs_rows), inp, n_buckets=4)
+    stray = create_documents_df(spark, [{"doc_id": "stray", "spans": []}])
+    (
+        stray.withColumn("bucket", F.lit(None).cast("int"))
+        .write.mode("append")
+        .partitionBy("bucket")
+        .parquet(inp)
+    )
+    assert os.path.isdir(os.path.join(inp, "bucket=__HIVE_DEFAULT_PARTITION__"))
+    with pytest.raises(ValueError, match="NULL buckets"):
+        run_job(spark, inp, str(tmp_path / "out"), "pct", n_buckets=4)
+
+
+@pytest.mark.parametrize(
+    "module, inputs",
+    [("job", ["--input", "in"]), ("extract_job", ["--docs", "in", "--media", "in"])],
+)
+def test_job_cli_rejects_unknown_mode(module, inputs, tmp_path):
+    """Both job CLIs check --mode against the registry at parse time."""
+    res = subprocess.run(
+        [
+            sys.executable, "-m", f"patent_decision_document_converter_spark.plans.{module}",
+            *inputs, "--output", str(tmp_path / "out"), "--mode", "officeActoin",
+        ],
+        capture_output=True,
+        text=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        timeout=120,
+    )
+    assert res.returncode == 2 and "invalid choice" in res.stderr, res.stderr[-2000:]
