@@ -334,6 +334,37 @@ def test_run_job_rerun_bucket_is_exactly_once(spark, docs_rows, tmp_path):
     assert again["doc_count"] == spark.read.parquet(inp).filter(F.col("bucket") == victim).count()
 
 
+def test_run_job_resumes_over_killed_write(spark, docs_rows, tmp_path):
+    """A run killed while committing one bucket leaves no manifest, a
+    truncated manifest tmp, a duplicated part file (a half-done append)
+    and a dead staging directory.  Resume re-runs that bucket alone and
+    ends with one row per doc_id, the original manifest and no tmp."""
+    inp, outp = str(tmp_path / "in"), str(tmp_path / "out")
+    write_documents(create_documents_df(spark, docs_rows), inp, n_buckets=4)
+    run_job(spark, inp, outp, "pct", n_buckets=4)
+    victim = min(completed_buckets(outp))
+    manifest = os.path.join(outp, "_manifests", f"bucket={victim}.json")
+    with open(manifest) as f:
+        first = json.load(f)
+    os.remove(manifest)
+    with open(manifest + ".tmp", "w") as f:
+        f.write(json.dumps(first)[:10])
+    data = os.path.join(outp, "data")
+    vdir = os.path.join(data, f"bucket={victim}")
+    part = next(p for p in sorted(os.listdir(vdir)) if p.endswith(".parquet"))
+    shutil.copy(os.path.join(vdir, part), os.path.join(vdir, "part-99999-killed.parquet"))
+    staging = os.path.join(data, ".spark-staging-dead")
+    os.makedirs(staging)
+    shutil.copy(os.path.join(vdir, part), staging)
+
+    assert run_job(spark, inp, outp, "pct", n_buckets=4)["buckets_run"] == 1
+    ids = [r["doc_id"] for r in spark.read.parquet(data).collect()]
+    assert sorted(ids) == sorted(r["doc_id"] for r in docs_rows)
+    with open(manifest) as f:
+        assert json.load(f) == first
+    assert not os.path.exists(manifest + ".tmp")
+
+
 def test_run_job_refuses_foreign_manifests(spark, docs_rows, tmp_path):
     """Resuming into an output whose manifests name another mode, bucket
     count or input path raises instead of skipping or mixing buckets."""
