@@ -130,8 +130,9 @@ def bench_conversion(spark: SparkSession, cpus: int, n_docs: int = N_BENCH_DOCS)
     df = df.persist()
     n_spans_in = df.select(F.sum(F.size("spans"))).head()[0]  # warm the cache
     # steady-state: python workers (fork+imports+trie) live per-executor on
-    # a real cluster — warm them before timing
-    convert_documents(df.limit(32 * cpus), mode="officeAction").select(F.count("*")).head()
+    # a real cluster — warm them before timing, one task per core
+    warm = convert_documents(df.limit(32 * cpus), "officeAction", n_partitions=cpus)
+    warm.select(F.count("*")).head()
     best = None
     for _rep in range(2):  # min-of-2: the sandbox host throttles in bursts
         t0 = time.time()

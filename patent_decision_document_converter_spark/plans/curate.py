@@ -209,7 +209,7 @@ def main() -> None:
     import argparse
     import json
 
-    from .job import MODES, get_spark
+    from .job import MODES, get_spark, parallelism_floor
 
     p = argparse.ArgumentParser(description="Corpus curation pipeline")
     p.add_argument("--input", required=True)
@@ -228,7 +228,7 @@ def main() -> None:
     args = p.parse_args()
 
     spark = get_spark(app_name="corpus-curation", master=args.master)
-    docs = spark.read.parquet(args.input)
+    docs = parallelism_floor(spark.read.parquet(args.input))
     curated, metrics = curate_corpus(
         docs,
         mode=args.mode,

@@ -2,9 +2,14 @@
 
 Physical plan (one shuffle max):
     Scan(parquet, spans column only)
-      -> Exchange(hash(xxhash64(doc_id) [+ salt]))     # skew defusal
+      -> [Exchange(round-robin, defaultParallelism)]   # parallelism floor
       -> MapInPandas(fused mode pipeline, Arrow batches)
       -> Write(parquet, bucketed by doc_id hash) + per-bucket manifests
+
+The parallelism floor (:func:`parallelism_floor`) sits on the raw input
+scan, where counting partitions only plans the scan.  Building the
+conversion itself (:func:`convert_documents`) runs no Spark job: its
+Python stage inherits the partitioning of whatever plan feeds it.
 
 Span semantics (FIXTURES.md §1 / BASELINE north_rule):
 - a document's text = '\\n'.join(kind='text' span texts, ordered by offset);
@@ -170,28 +175,19 @@ def convert_documents(
 ) -> DataFrame:
     """documents(doc_id, spans) -> spans_out DataFrame.
 
-    One repartition by doc_id hash (optionally salted — `salt_buckets` > 0
-    spreads hot hash ranges; doc granularity is preserved since the UDF is
-    per-row, the salt only balances partitions).
-
-    With ``n_partitions=None`` a PARALLELISM FLOOR still applies: when
-    the input plan yields fewer partitions than half the cluster's cores
-    (e.g. a single small parquet file = one split — the r4 judge watched
-    the benched flagship run `(0 + 1) / 1` on one core of 32), the spans
-    are hash-repartitioned to defaultParallelism before the Python
-    stage.  With enough input splits (the 100 TB case) this is a no-op
-    and the conversion inherits the scan's partitioning shuffle-free.
+    Purely lazy: building the conversion runs no Spark job.  With
+    ``n_partitions`` set, one repartition by doc_id hash (optionally
+    salted — `salt_buckets` > 0 spreads hot hash ranges; doc granularity
+    is preserved since the UDF is per-row, the salt only balances
+    partitions).  Without it the Python stage inherits the input's
+    partitioning shuffle-free; a single-split input gets its parallelism
+    floor where it is read (:func:`parallelism_floor`), not here, since
+    counting the partitions of a plan with a shuffle runs every stage
+    before it.
     """
     if mode not in MODES:
         raise KeyError(f"unknown mode {mode!r}")
     sdf = df.select("doc_id", "spans")
-    if n_partitions is None and not df.isStreaming:
-        # (.rdd is illegal on a streaming plan; micro-batch sizing is the
-        # stream trigger's job, so the floor is batch-only)
-        spark = df.sparkSession
-        target = spark.sparkContext.defaultParallelism
-        if sdf.rdd.getNumPartitions() < max(1, target // 2):
-            n_partitions = target
     if n_partitions:
         key = F.xxhash64("doc_id")
         if salt_buckets:
@@ -557,6 +553,26 @@ def completed_buckets(output_path: str, lineage: dict | None = None) -> set[int]
     return done
 
 
+def parallelism_floor(df: DataFrame) -> DataFrame:
+    """Round-robin ``df`` to defaultParallelism when its plan yields fewer
+    partitions than half the cluster's cores; otherwise return it as is.
+
+    A small single-file input is one scan split, so every downstream
+    stage would run as ONE task on one core.  Apply the floor to a raw
+    scan: there counting partitions only plans the scan, while on a plan
+    with a shuffle it runs every stage before it.  With enough splits
+    (the 100 TB case — thousands of row groups) this is a no-op and
+    scan-level pushdown and pruning are untouched.  File-split configs
+    (``spark.sql.files.minPartitionNum``) cannot substitute: ranged
+    splits of a single-row-group parquet still land every row in one
+    task.
+    """
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < max(1, target // 2):
+        return df.repartition(target)
+    return df
+
+
 def distinct_buckets_validated(
     df: DataFrame, n_buckets: int, validate: bool, what: str = "input"
 ) -> list[int]:
@@ -593,7 +609,8 @@ def pending_buckets(
     df: DataFrame, n_buckets: int, done: set[int], what: str = "input"
 ) -> tuple[DataFrame, list[int]]:
     """Attach the bucket column (or validate a pre-existing one) and prune
-    the ``done`` buckets; returns (pruned df, its distinct bucket ids).
+    the ``done`` buckets; returns (pruned df under its
+    :func:`parallelism_floor`, its distinct bucket ids).
 
     On a bucket-partitioned layout the prune is partition pruning: no
     data of a completed bucket is read.  NULL buckets survive the prune so
@@ -604,7 +621,8 @@ def pending_buckets(
         df = df.withColumn("bucket", doc_bucket(n_buckets))
     if done:
         df = df.filter(F.col("bucket").isNull() | ~F.col("bucket").isin(sorted(done)))
-    return df, distinct_buckets_validated(df, n_buckets, validate=has_bucket, what=what)
+    buckets = distinct_buckets_validated(df, n_buckets, validate=has_bucket, what=what)
+    return parallelism_floor(df), buckets
 
 
 def commit_buckets(

@@ -8,6 +8,7 @@ The heavier sweep stays in tools/fuzz_diff.py for ad-hoc/judge runs.
 """
 
 import json
+import os
 import random
 import shutil
 import subprocess
@@ -17,7 +18,14 @@ import pytest
 from patent_decision_document_converter_spark.plans.registry import MODES, convert_text
 from patent_decision_document_converter_spark.sources.generator import make_document_text
 
-pytestmark = pytest.mark.skipif(shutil.which("node") is None, reason="node not available")
+from .conftest import JS_REFERENCE_DIR
+
+pytestmark = [
+    pytest.mark.skipif(shutil.which("node") is None, reason="node not available"),
+    pytest.mark.skipif(
+        not os.path.isdir(JS_REFERENCE_DIR), reason="reference JS checkout not available"
+    ),
+]
 
 SEED = 20260817
 N_DOCS = 8

@@ -20,12 +20,14 @@ from patent_decision_document_converter_spark.plans.extract_job import (
     extract_and_enrich,
     run_extract_job,
 )
-from patent_decision_document_converter_spark.plans.job import get_spark
+from patent_decision_document_converter_spark.plans.job import convert_documents, get_spark
 from patent_decision_document_converter_spark.plans.registry import convert_text
 from patent_decision_document_converter_spark.sources.documents import (
     create_documents_df,
     write_documents,
 )
+
+from .conftest import spark_jobs_during
 
 
 @pytest.fixture(scope="module")
@@ -105,6 +107,18 @@ def test_extract_and_enrich_splices_all_legs(spark, paths):
     # offsets densely renumbered
     for r in extract_and_enrich(docs, media).collect():
         assert [s["offset"] for s in r["spans"]] == list(range(len(r["spans"])))
+
+
+def test_extract_conversion_builds_without_running(spark, paths):
+    """Building the extract job's conversion submits no Spark job: the
+    enrich join's shuffle would otherwise run the whole extraction DAG
+    once to count partitions and again in the write."""
+    docs_path, media_path = paths
+    docs, media = spark.read.parquet(docs_path), spark.read.parquet(media_path)
+    jobs = spark_jobs_during(
+        spark, lambda: convert_documents(extract_and_enrich(docs, media), "officeAction")
+    )
+    assert jobs == []
 
 
 def test_mismatched_bucket_layout_fails_fast(spark, paths, tmp_path):

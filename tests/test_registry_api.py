@@ -1,9 +1,13 @@
 """PipelineRegistry API surface tests (filterRegistry.js:122-506 parity:
 positional editing, enable/disable, hooks, stop-on-error policy, plugins)."""
 
+import os
+
 import pytest
 
 from patent_decision_document_converter_spark.plans.registry import PipelineRegistry
+
+from .conftest import JS_REFERENCE_DIR
 
 
 def up(s: str) -> str:
@@ -120,6 +124,9 @@ def test_apply_list_adhoc():
         r.apply_list([], "hi")
 
 
+@pytest.mark.skipif(
+    not os.path.isdir(JS_REFERENCE_DIR), reason="reference JS checkout not available"
+)
 def test_parameterized_pipeline_matches_reference_js():
     """Register a custom pipeline with a parameterized step (padHead count=2)
     and compare against the reference FilterRegistry running the SAME ad-hoc

@@ -17,6 +17,8 @@ from patent_decision_document_converter_spark.plans.job import (
     completed_buckets,
     convert_documents,
     get_spark,
+    parallelism_floor,
+    pending_buckets,
     quarantine_split,
     run_job,
 )
@@ -30,7 +32,7 @@ from patent_decision_document_converter_spark.sources.generator import (
     make_documents_rows,
 )
 
-from .conftest import read_fixture
+from .conftest import read_fixture, spark_jobs_during
 
 
 @pytest.fixture(scope="module")
@@ -285,31 +287,44 @@ def test_run_job_resumable(spark, docs_rows, tmp_path_factory):
     assert total == len(docs_rows)
 
 
-def test_convert_documents_parallelism_floor(spark, docs_rows):
+def test_parallelism_floor_at_scan(spark, docs_rows, tmp_path):
     """A small single-split input (one parquet file on the driver's
     testdata = one scan partition) must NOT run the whole Python
-    conversion stage as one task on one core: with n_partitions unset,
-    convert_documents hash-repartitions up to defaultParallelism when
-    the input plan has fewer than half that many partitions — and stays
-    a no-op when splits already suffice (the 100 TB case)."""
+    conversion stage as one task on one core: ``pending_buckets`` hands
+    the jobs their input scan under ``parallelism_floor``, which
+    round-robins it up to defaultParallelism when it has fewer than half
+    that many partitions — and is a no-op when splits already suffice
+    (the 100 TB case)."""
     df = create_documents_df(spark, docs_rows)
     target = spark.sparkContext.defaultParallelism
+    single, wide = str(tmp_path / "single"), str(tmp_path / "wide")
+    df.coalesce(1).write.parquet(single)
+    df.repartition(target).write.parquet(wide)
 
-    floored = convert_documents(df.coalesce(1), "pct")
+    assert parallelism_floor(df.coalesce(1)).rdd.getNumPartitions() == target
+    floored, _ = pending_buckets(spark.read.parquet(single), 4, set())
     assert floored.rdd.getNumPartitions() == target
 
     # enough input splits -> no repartition is inserted
-    wide = df.repartition(target, "doc_id")
-    out = convert_documents(wide, "pct")
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 1  # only the caller's own repartition
+    scan, _ = pending_buckets(spark.read.parquet(wide), 4, set())
+    plan = convert_documents(scan, "pct")._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
 
     # the floor changes plan shape only, never results
-    a = sorted(floored.collect(), key=lambda r: r["doc_id"])
-    b = sorted(out.collect(), key=lambda r: r["doc_id"])
-    assert [r.asDict(recursive=True) for r in a] == [
-        r.asDict(recursive=True) for r in b
-    ]
+    outp = str(tmp_path / "out")
+    run_job(spark, single, outp, "pct", n_buckets=4)
+    a = spark.read.parquet(os.path.join(outp, "data")).drop("bucket").collect()
+    b = convert_documents(df, "pct").collect()
+    assert sorted((r.asDict(recursive=True) for r in a), key=lambda r: r["doc_id"]) == sorted(
+        (r.asDict(recursive=True) for r in b), key=lambda r: r["doc_id"]
+    )
+
+
+def test_convert_documents_builds_without_running(spark, docs_rows):
+    """Building the conversion submits no Spark job, also over a shuffle,
+    where counting partitions would run every stage before the write."""
+    df = create_documents_df(spark, docs_rows).repartition(3)
+    assert spark_jobs_during(spark, lambda: convert_documents(df, "pct")) == []
 
 
 def test_run_job_rerun_bucket_is_exactly_once(spark, docs_rows, tmp_path):

@@ -71,7 +71,8 @@ def main() -> None:
     df_u = spark.createDataFrame(rows_u, schema=DOCUMENTS_SCHEMA).persist()
     df_u.count()
     # warm python workers
-    convert_documents(df.limit(32 * CPUS), mode="officeAction").select(F.count("*")).head()
+    warm = convert_documents(df.limit(32 * CPUS), "officeAction", n_partitions=CPUS)
+    warm.select(F.count("*")).head()
 
     def timed(tag: str, frame, fn) -> dict:
         best = None

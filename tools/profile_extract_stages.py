@@ -1,6 +1,8 @@
 """Stage-by-stage timing of the extraction pipeline — locates where the
 wall-clock goes at a given parallelism level (diagnosis tool for the
-N→4N scaling work; not part of the bench record).
+N→4N scaling work; not part of the bench record).  Ends with the number
+of Spark jobs one ``run_extract_job`` call submits, so an eager probe
+that re-runs the extraction DAG shows up as a count, without tracing.
 
 Usage: python tools/profile_extract_stages.py <cpus> [n_docs_k]
 """
@@ -9,6 +11,7 @@ from __future__ import annotations
 
 import os
 import sys
+import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -29,7 +32,10 @@ def main() -> None:
         enrich_media_spans,
         pdf_extract_text_df,
     )
-    from patent_decision_document_converter_spark.plans.extract_job import extract_and_enrich
+    from patent_decision_document_converter_spark.plans.extract_job import (
+        extract_and_enrich,
+        run_extract_job,
+    )
     from patent_decision_document_converter_spark.plans.job import convert_documents
 
     spark = (
@@ -74,6 +80,14 @@ def main() -> None:
     t("convert_documents (docs, no extract)", conv_only, F.to_json("spans"))
     full = convert_documents(extract_and_enrich(docs, media), "officeAction")
     t("FULL pipeline", full, F.to_json("spans"))
+
+    sc = spark.sparkContext
+    sc.setJobGroup("run_extract_job", "one run_extract_job call")
+    with tempfile.TemporaryDirectory() as out:
+        run_extract_job(spark, docs_dir, media_dir, out)
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("run_extract_job")
+    print(f"{'Spark jobs per run_extract_job call':38s} {len(jobs):7d}", flush=True)
     spark.stop()
 
 
